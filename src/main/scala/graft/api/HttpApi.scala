@@ -40,8 +40,14 @@ import graft.model._
 final class HttpApi(db: VectorDb, port: Int = 0) {
   import HttpApi._
 
+  // The JDK server writes a response's headers and body as two TCP
+  // segments; with Nagle on, the body waits for the client's delayed
+  // ACK (~40 ms per request). The JDK reads this once, when its first
+  // server class loads, so it must be set before `HttpServer.create`.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  private[graft] val executor = java.util.concurrent.Executors.newFixedThreadPool(8)
+  server.setExecutor(executor)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -60,7 +66,13 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
     server.start()
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stops the server and its handler threads (non-daemon: left
+    * running they keep the JVM alive). */
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+    executor.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   // ---- route handlers: (method, path segments under the context, body)
 

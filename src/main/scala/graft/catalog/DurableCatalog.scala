@@ -288,7 +288,11 @@ final class CatalogWal(spark: SparkSession, root: String) {
     val all = listWal(f).flatMap { case (_, p) =>
       readRecords(f, p).map(_.get("seq").asLong())
     }
-    if (all.isEmpty) -1L else all.max
+    // never below the manifest's fence: a checkpoint truncates the
+    // records it covers, and a sequence restarted under the fence
+    // would be skipped by the next recovery's replay
+    val fence = readManifest().map(_._1).getOrElse(-1L)
+    if (all.isEmpty) fence else math.max(all.max, fence)
   }
 
   def lastSeq: Long = seq

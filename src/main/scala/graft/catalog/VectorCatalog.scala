@@ -724,7 +724,14 @@ final class VectorCatalog(val spark: SparkSession,
   def compact(): Unit = stateLock.synchronized(compactLocked())
 
   private def compactLocked(): Unit = {
-    base = assembleView().localCheckpoint(true)
+    // Fold into the previous base's partition count: a bare checkpoint
+    // of the view would keep the write buffer's local-scan partitions
+    // too, so every fold would add partitions and every later scan
+    // tasks. coalesce is narrow (no shuffle); an empty base (zero
+    // partitions) takes the view's own.
+    val parts = base.rdd.getNumPartitions
+    val view = assembleView()
+    base = (if (parts > 0) view.coalesce(parts) else view).localCheckpoint(true)
     upserts.clear()
     chunkTombstones.clear()
     docTombstones.clear()

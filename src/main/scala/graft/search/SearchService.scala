@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{IndexType, VectorCatalog}
+import graft.catalog.{HnswState, IndexState, IndexType, VectorCatalog}
 import graft.functions.GraftFunctions._
 import graft.model._
 
@@ -20,6 +20,16 @@ import graft.model._
  *      the index search POST-filters its candidates
  *      against that universe                       search_service.py:98-110
  *   6. exact cosine rerank -> top-k, timed         indexes.py:162-168
+ *
+ * Every ANN tier runs in two narrow phases with no join and no
+ * exchange: its candidate ids are gathered on the driver (one job over
+ * the tier's cached index table, or no job at all for the driver-held
+ * HNSW graph), then [[rerank]] runs the exact tier's single scan over
+ * the universe restricted to those ids. Spark plans an id list of more
+ * than 10 entries as an `InSet` hash lookup that ships once per stage
+ * in the task binary, so the rerank is one stage whatever the tier —
+ * where a semi-join against a candidate DataFrame costs a shuffle or
+ * broadcast stage, and AQE stage jobs, per search.
  *
  * Post-filter semantics preserved deliberately: with a selective filter
  * an ANN index may return < k rows even when k matches exist — that is
@@ -42,19 +52,29 @@ final class SearchService(catalog: VectorCatalog) {
       val universe = catalog.chunksFiltered(libraryId, q.metadataFilters)
         .filter(col("embedding").isNotNull)
 
-      val results = catalog.indexState(libraryId).map(_.indexType) match {
-        case Some(IndexType.Lsh) if catalog.indexState(libraryId).exists(_.signatures.isDefined) =>
-          lshSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.Ivf) =>
-          ivfSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.Hnsw) if catalog.indexState(libraryId).exists(_.hnsw.isDefined) =>
-          hnswSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.IvfPq) =>
-          ivfPqSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.Binary) if catalog.indexState(libraryId).exists(_.signatures.isDefined) =>
-          binarySearch(libraryId, universe, queryVec, k)
-        case _ => // exact index type, or index never built => brute force
-          exactTopK(universe, queryVec, k)
+      // candidate ids of the library's index tier; None = brute force
+      // (exact index type, index never built, or LSH's empty-set fallback)
+      val candidates: Option[Seq[String]] = catalog.indexState(libraryId).flatMap { s =>
+        s.indexType match {
+          case IndexType.Lsh if s.signatures.isDefined =>
+            Some(lshCandidates(s, queryVec)).filter(_.nonEmpty)
+          case IndexType.Ivf => // members of the probed cells; untrained => empty
+            Some(s.ivf.fold(Seq.empty[String])(m =>
+              collectIds(m.candidates(s.assigned.get, queryVec))))
+          case IndexType.Hnsw if s.hnsw.isDefined =>
+            Some(hnswCandidates(s.hnsw.get, queryVec, k))
+          case IndexType.IvfPq => // residual-ADC top 4k (floor 50); untrained => empty
+            Some(s.ivfpq.fold(Seq.empty[String])(p => collectIds(
+              p.candidatesWith(queryVec, nprobe = GraftConfig.ivfNprobe, n = math.max(4 * k, 50)))))
+          case IndexType.Binary if s.signatures.isDefined =>
+            Some(binaryCandidates(s, queryVec, k))
+          case _ => None
+        }
+      }
+      val results = candidates match {
+        case None => exactTopK(universe, queryVec, k)
+        case Some(Seq()) => Seq.empty
+        case Some(ids) => rerank(universe, ids, queryVec, k)
       }
       val ms = (System.nanoTime() - t0) / 1e6
       SearchResponse(results, results.size, ms)
@@ -68,78 +88,53 @@ final class SearchService(catalog: VectorCatalog) {
       .orderBy(col("similarity_score").desc, col("id").asc)
       .limit(k))
 
-  /** Q2: bucket-join candidates; an EMPTY CANDIDATE SET falls back to a
-    * full scan (indexes.py:151-153 — the fallback fires before the
-    * universe membership check, so a non-empty candidate set that the
-    * metadata post-filter eliminates correctly returns < k rows, it
-    * does NOT fall back). */
-  private def lshSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val state = catalog.indexState(libraryId).get
+  /** The shared second phase of every ANN tier: post-filter the
+    * candidates against the universe and exact-rerank them, in the
+    * exact tier's one-stage plan. */
+  private def rerank(universe: DataFrame, ids: Seq[String],
+      queryVec: Array[Float], k: Int): Seq[SearchResult] =
+    exactTopK(universe.filter(col("id").isin(ids: _*)), queryVec, k)
+
+  /** Runs a candidate-id plan as one job and de-duplicates on the driver. */
+  private def collectIds(candidates: DataFrame): Seq[String] =
+    candidates.select("id").collect().map(_.getString(0)).distinct.toSeq
+
+  /** Q2: the query's bucket keys filter the signature table. An EMPTY
+    * CANDIDATE SET falls back to a full scan (indexes.py:151-153 — the
+    * fallback fires before the universe membership check, so a
+    * non-empty candidate set that the metadata post-filter eliminates
+    * correctly returns < k rows, it does NOT fall back). The id set
+    * of `LshModel.multiProbeCandidates`, de-duplicated on the driver
+    * where its `dropDuplicates` would cost a shuffle stage. */
+  private def lshCandidates(state: IndexState, queryVec: Array[Float]): Seq[String] = {
     // flips=0 is exactly the reference's single-probe candidates;
     // >0 adds Lv-et-al multi-probe buckets (opt-in, GraftConfig —
     // either the explicit flips knob or the active recall preset)
     val flips = GraftConfig.lshActivePreset.map(_.flips)
       .getOrElse(GraftConfig.lshMultiProbeFlips)
-    val candidates = state.lsh.get.multiProbeCandidates(
-      state.signatures.get, queryVec, flips)
-    if (candidates.isEmpty) exactTopK(universe, queryVec, k)
-    else exactTopK(universe.join(candidates, Seq("id"), "left_semi"), queryVec, k)
+    val buckets = state.lsh.get.multiProbeBucketsOf(queryVec, flips)
+    collectIds(state.signatures.get
+      .filter(col("bucket").isin(buckets.toIndexedSeq.map(Long.box): _*)))
   }
 
-  /** Q3: probe nprobe clusters; untrained => empty (indexes.py:343). */
-  private def ivfSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val state = catalog.indexState(libraryId).get
-    state.ivf match {
-      case None => Seq.empty // untrained IVF returns no results
-      case Some(model) =>
-        val probed = model.candidates(state.assigned.get, queryVec).select("id")
-        val candidateChunks = universe.join(probed, Seq("id"), "left_semi")
-        exactTopK(candidateChunks, queryVec, k)
-    }
-  }
-
-  /** HNSW tier: graph navigation proposes a candidate set (fetch factor
-    * 4k, floor 50 — the two-tier contract: graph error is removed by
-    * the exact rerank below), then the same post-filter + exact-cosine
-    * top-k as every other index path. The graph covers all indexed
-    * chunks, so like IVF a selective metadata filter may return < k —
-    * the reference's observable post-filter semantics. */
-  private def hnswSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val hs = catalog.indexState(libraryId).get.hnsw.get
+  /** HNSW tier: graph navigation proposes a candidate set on the driver
+    * (fetch factor 4k, floor 50 — the two-tier contract: graph error is
+    * removed by the exact rerank). The graph covers all indexed chunks,
+    * so like IVF a selective metadata filter may return < k — the
+    * reference's observable post-filter semantics. */
+  private def hnswCandidates(hs: HnswState, queryVec: Array[Float], k: Int): Seq[String] = {
     val fetch = math.max(4 * k, 50)
-    val candIds = hs.graph.search(queryVec, fetch, ef = math.max(100, fetch))
+    hs.graph.search(queryVec, fetch, ef = math.max(100, fetch))
       .map { case (node, _) => hs.chunkIds(node.toInt) }
-    exactTopK(universe.filter(col("id").isin(candIds: _*)), queryVec, k)
-  }
-
-  /** IVF-PQ tier: residual-ADC candidate generation over the encoded
-    * codes (probe nprobe cells, fetch 4k floor 50), exact cosine
-    * rerank over the survivors. Untrained (below the nlist threshold
-    * at build) => empty, exactly like plain IVF. */
-  private def ivfPqSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    catalog.indexState(libraryId).get.ivfpq match {
-      case None => Seq.empty // untrained: reference IVF semantics
-      case Some(s) =>
-        val fetch = math.max(4 * k, 50)
-        val cands = s.candidatesWith(queryVec,
-          nprobe = GraftConfig.ivfNprobe, n = fetch).select("id")
-        exactTopK(universe.join(cands, Seq("id"), "left_semi"), queryVec, k)
-    }
   }
 
   /** Binary sign-quantization tier: Hamming top-C over the packed
     * signature table (integer distance, id tiebreak — a per-partition
     * heap over 8-byte-per-64-dims rows, the cheapest prefilter scan of
-    * any tier), then the shared post-filter + exact-cosine top-k. The
-    * candidate set is never empty for a non-empty index (every indexed
-    * chunk has a signature), so there is no LSH-style fallback. */
-  private def binarySearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val state = catalog.indexState(libraryId).get
+    * any tier). The candidate set is never empty for a non-empty index
+    * (every indexed chunk has a signature), so there is no LSH-style
+    * fallback. */
+  private def binaryCandidates(state: IndexState, queryVec: Array[Float], k: Int): Seq[String] = {
     // n-proportional candidate budget: 1-bit/dim signatures lose
     // recall at FIXED C as the corpus grows (measured curve in
     // GraftConfig.binaryCandidateFraction's doc). The count was
@@ -149,12 +144,10 @@ final class SearchService(catalog: VectorCatalog) {
     val fetch = math.max(math.max(4 * k, 64),
       math.ceil(n * GraftConfig.binaryCandidateFraction).toInt)
     val qSig = graft.index.BinaryQuant.pack(queryVec)
-    val cands = state.signatures.get
+    collectIds(state.signatures.get
       .withColumn("ham", hamming_dist(col("sig"), typedLit(qSig.toSeq)))
       .orderBy(col("ham").asc, col("id").asc)
-      .limit(fetch)
-      .select("id")
-    exactTopK(universe.join(cands, Seq("id"), "left_semi"), queryVec, k)
+      .limit(fetch))
   }
 
   private def collectResults(df: DataFrame): Seq[SearchResult] = {

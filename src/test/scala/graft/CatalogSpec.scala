@@ -203,4 +203,27 @@ class CatalogSpec extends SparkSpec {
     assert(st2.ivf.get.centroids.map(_.toSeq).toSeq == centroidsBefore.toSeq) // unchanged
     assert(st2.assigned.get.count() == 111)
   }
+
+  test("compaction keeps the base's partition count and the view's contents") {
+    val cat = freshCatalog
+    val lib = cat.createLibrary("L").toOption.get
+    val doc = cat.createDocument(lib.id, "D").toOption.get
+    cat.createChunks(doc.id, (1 to 20).map(i => (s"seed chunk $i", Map.empty[String, String])))
+    cat.compact()
+    val parts = cat.chunks.rdd.getNumPartitions
+    assert(parts > 1)
+    def rows = cat.chunks.collect().map(_.toString).sorted.toSeq
+    for (round <- 1 to 3) {
+      // churn: creates land in the write buffer's local scan, updates
+      // and deletes tombstone base rows
+      val made = cat.createChunks(doc.id,
+        (1 to 10).map(i => (s"round $round chunk $i", Map.empty[String, String]))).toOption.get
+      cat.updateChunk(made.head.id, text = Some(s"round $round updated"))
+      cat.deleteChunk(made.last.id)
+      val uncoalesced = rows
+      cat.compact()
+      assert(cat.chunks.rdd.getNumPartitions == parts, s"round $round")
+      assert(rows == uncoalesced, s"round $round")
+    }
+  }
 }

@@ -106,6 +106,21 @@ class DurabilitySpec extends SparkSpec {
     assert(!chunkRows(rec).exists(_.id == c6.id))
   }
 
+  test("writes after reopening a checkpointed root survive the next recovery") {
+    val root = freshRoot()
+    val first = DurableCatalog.recover(spark, root)
+    val lib = first.createLibrary("reopen").toOption.get
+    val doc = first.createDocument(lib.id, "d").toOption.get
+    for (i <- 1 to 8) first.createChunk(doc.id, s"before $i").toOption.get
+    first.checkpoint() // truncates the WAL: the reopened log starts empty
+    val reopened = DurableCatalog.recover(spark, root)
+    val written = (1 to 4).map(i => reopened.createChunk(doc.id, s"after $i").toOption.get.id)
+    val rec = DurableCatalog.recover(spark, root)
+    val recovered = chunkRows(rec).map(_.id).toSet
+    assert(written.forall(recovered), s"lost ${written.filterNot(recovered)}")
+    assert(recovered.size == 12)
+  }
+
   test("recover on an empty root yields an empty catalog") {
     val rec = DurableCatalog.recover(spark, freshRoot())
     assert(rec.inner.listLibraries().isEmpty)

@@ -186,6 +186,32 @@ class HttpApiSpec extends SparkSpec {
     request("DELETE", s"/api/v1/libraries/$libId")
   }
 
+  test("keep-alive round trips add little beyond the handler's own time (no Nagle stall)") {
+    // a fresh HTTP/1.1 client: one keep-alive connection of its own
+    val c = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val health = HttpRequest.newBuilder().uri(URI.create(s"$base/health")).GET().build()
+    c.send(health, HttpResponse.BodyHandlers.ofString()) // connection up
+    val gapsMs = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val r = c.send(health, HttpResponse.BodyHandlers.ofString())
+      val clientMs = (System.nanoTime() - t0) / 1e6
+      clientMs - r.headers().firstValue("X-Process-Time").get().toDouble * 1000
+    }.sorted
+    val median = (gapsMs(9) + gapsMs(10)) / 2
+    assert(median < 25.0, s"client-server gap ${median} ms; all: $gapsMs")
+  }
+
+  test("stop() shuts down the handler threads") {
+    val a = new HttpApi(new VectorDb(spark))
+    a.start()
+    val r = client.send(HttpRequest.newBuilder()
+      .uri(URI.create(s"http://127.0.0.1:${a.boundPort}/health")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode == 200)
+    a.stop()
+    assert(a.executor.isTerminated)
+  }
+
   test("chunk listings: include_embeddings elide + limit/offset paging") {
     val libId = json(request("POST", "/api/v1/libraries", """{"name":"paged"}"""))
       .get("id").asText
